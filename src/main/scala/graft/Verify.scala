@@ -31,18 +31,21 @@ object Verify {
       val skipped = SparkEntry.queries.keySet -- sel
       System.err.println(s"[verify] SUBSET run: ${sel.size} queries; skipping ${skipped.size} (stale outputs may remain in $outDir)")
     }
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       // drop persisted intermediates leaked by the previous query (the
       // Bench.scala cache-pollution note); sweep the persistent-RDD
       // registry too — localCheckpoint blocks escape catalog.clearCache
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -61,5 +64,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // any failed query fails the run, as in Bench
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.toSeq.sorted.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -19,8 +19,13 @@ import org.apache.spark.sql.functions.{col, concat_ws}
   *     by `groupByKey` — nothing to materialize ourselves;
   *   - the phase barrier (master.go:77-78) is the stage boundary at the
   *     shuffle;
-  *   - the master's single-threaded merge sort (master.go:87-128) becomes a
-  *     distributed `orderBy` (RangePartitioning) — strictly more scalable;
+  *   - the map tasks (one per input file, master.go:69-85) run on every task
+  *     slot: [[textFiles]] splits the files across `defaultParallelism`
+  *     partitions;
+  *   - the master's single-threaded merge (master.go:87-128) stays a single
+  *     writer: [[writeMergedText]] moves the reduced rows, once, into one
+  *     partition and sorts them there; `mapReduce*` still end in `orderBy` so
+  *     a Dataset caller that collects gets key-sorted rows;
   *   - fault tolerance / scheduling (common_rpc.go:84-136) is the
   *     DAGScheduler's job, zero code here.
   *
@@ -111,22 +116,27 @@ object MapReduce {
 
   /** Whole-file-per-record input, matching DoMap's ReadFile semantics
     * (common_map.go:66-70): one (path, contents) row per file.
+    * `minPartitions` is passed explicitly because `wholeTextFiles` defaults
+    * it to `min(defaultParallelism, 2)`, which packs any number of files into
+    * at most 2 map tasks; this spreads them over every task slot.
     */
   def textFiles(spark: SparkSession, paths: String): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.sparkContext.wholeTextFiles(paths).toDS()
+    spark.sparkContext.wholeTextFiles(paths, spark.sparkContext.defaultParallelism).toDS()
   }
 
   /** The reference's merged result sink (master.go:112-127 via
     * MergeResultName, common.go:57-59): one text file of `"key: value"`
-    * lines, key-sorted. `coalesce(1)` reproduces the single-file contract;
-    * drop it (and write nReduce part files) when the result is big — the
-    * sort itself is distributed either way.
+    * lines, key-sorted. This is the reference's single-writer merge: the
+    * reduced rows move once into one partition, which sorts them and writes
+    * the file. The order does not depend on the caller's: a global `orderBy`
+    * in `ds` sits under the `repartition(1)`, so the optimizer drops it and
+    * the reduce side runs once, with no range-partitioning sample job.
     */
   def writeMergedText(ds: Dataset[(String, String)], path: String): Unit =
-    ds.orderBy(col("_1"))
+    ds.repartition(1)
+      .sortWithinPartitions(col("_1"))
       .select(concat_ws(": ", col("_1"), col("_2")))
-      .coalesce(1)
       .write.mode("overwrite").text(path)
 
   /** Whitespace class spelled out to match the DuckDB-RE2 oracle regex

@@ -1,6 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.core.MapReduce
@@ -9,10 +18,11 @@ import graft.core.MapReduce
   * (/root/reference/src/mapreduce/common_test_suite.go:53-114): integers
   * 0..99 split across input files must come back as exactly 100
   * STRING-sorted `"key: value"` lines — plus equivalence checks across the
-  * three reduce paths (mapGroups, combiner, explicit-nReduce) and
-  * tokenizer invariants.
+  * three reduce paths (mapGroups, combiner, explicit-nReduce), tokenizer
+  * invariants, the map split over task slots, and the merged write's plan:
+  * one single-partition shuffle, so the reduce side runs once.
   */
-class MapReduceSpec extends AnyFunSuite {
+class MapReduceSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
 
   /** MakeInputs parity: 0..99 one per line, contiguous across `num` files. */
@@ -78,5 +88,76 @@ class MapReduceSpec extends AnyFunSuite {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("textFiles: 8+ small files spread over every task slot, one record per file") {
+    val dir = Files.createTempDirectory("mrsplit")
+    val names = (0 until 12).map(f => f"in-$f%02d.txt")
+    names.foreach(n => Files.writeString(dir.resolve(n), s"$n a b c\n"))
+    val input = MapReduce.textFiles(spark, s"$dir/in-*.txt")
+    assert(input.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
+    val rows = input.collect()
+    assert(rows.length === names.size)
+    assert(rows.map { case (p, c) => (p.split('/').last, c) }.sorted.toSeq ===
+      names.map(n => (n, s"$n a b c\n")))
+  }
+
+  /** LiveListenerBus.waitUntilEmpty is private[spark] but public in the
+    * bytecode; listener events are async, so drain before reading them. */
+  private def drainBus(): Unit = {
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+    bus.getClass.getMethods
+      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0).get
+      .invoke(bus)
+  }
+
+  test("writeMergedText: one SinglePartition shuffle, no range sort, reduce side runs once") {
+    val dir = Files.createTempDirectory("mrplan")
+    makeInputs(dir, 5)
+    val plans = ArrayBuffer.empty[SparkPlan]
+    val qeListener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val group = "mr-merged-write-plan"
+    val jobs = new AtomicInteger
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    drainBus()
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.sparkContext.setJobGroup(group, "distinctTokens -> writeMergedText")
+    try {
+      val input = MapReduce.textFiles(spark, s"$dir/824-mrinput-*.txt")
+      MapReduce.writeMergedText(MapReduce.distinctTokens(spark, input), dir.resolve("merged").toString)
+      drainBus()
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    assert(plans.nonEmpty, "no QueryExecution captured for the write")
+    val shuffles = plans.toSeq.flatMap(p => collectWithSubqueries(p) { case x: ShuffleExchangeLike => x })
+    val plan = plans.mkString("\n")
+    assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]) &&
+      !plan.contains("rangepartitioning"), s"range sort in the merged write:\n$plan")
+    assert(shuffles.count(_.outputPartitioning == SinglePartition) === 1, plan)
+    assert(jobs.get <= 3, s"${jobs.get} jobs: the reduce side ran more than once\n$plan")
+  }
+
+  test("writeMergedText: unsorted input still gives one key-sorted part file") {
+    import spark.implicits._
+    val keys = new scala.util.Random(7).shuffle((0 until 300).map(i => s"k$i"))
+    val ds = keys.map(k => (k, k.reverse)).toDS().repartition(3)
+    val out = Files.createTempDirectory("mrunsorted").resolve("merged")
+    MapReduce.writeMergedText(ds, out.toString)
+    val parts = out.toFile.listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length === 1)
+    val lines = Files.readAllLines(parts.head.toPath).asScala.toSeq
+    assert(lines === keys.sorted.map(k => s"$k: ${k.reverse}")) // STRING sort: k0,k1,k10,...
   }
 }
